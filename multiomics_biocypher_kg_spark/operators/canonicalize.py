@@ -13,8 +13,9 @@ version:
 - converges in O(component diameter) rounds; same-as components
   are shallow (reference: fixed point in 2-3 passes), so 5-15
   rounds in practice,
-- ``localCheckpoint`` every round truncates the lineage so the plan
-  doesn't grow exponentially,
+- a checkpoint every round truncates the lineage so the plan
+  doesn't grow exponentially (reliable when the SparkContext has a
+  checkpoint dir, else ``localCheckpoint``),
 - skew: min() aggregation does map-side partial aggregation
   (combiners), so a hot node's updates collapse before the shuffle;
   AQE skew-join handles the join side.
@@ -31,17 +32,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _ckpt(df: DataFrame, mode: str) -> DataFrame:
-    """Lineage truncation per round. 'local' = executor-local blocks
-    (fast; a lost executor kills the run — fine single-node / retried
-    jobs). 'reliable' = HDFS/DFS checkpoint (caller must
-    ``spark.sparkContext.setCheckpointDir`` to durable storage) —
-    the 1000-executor setting, where executor loss is routine."""
-    if mode == "reliable":
+def _ckpt(df: DataFrame) -> DataFrame:
+    """Lineage truncation per round. With a checkpoint dir set on the
+    SparkContext (``setCheckpointDir`` to durable storage — the
+    1000-executor setting, where executor loss is routine) this is a
+    reliable checkpoint; otherwise executor-local blocks (fast; a lost
+    executor kills the run — fine single-node / retried jobs)."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
         return df.checkpoint(eager=True)
-    if mode == "local":
-        return df.localCheckpoint(eager=True)
-    return df
+    return df.localCheckpoint(eager=True)
 
 
 def connected_components(
@@ -49,8 +48,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    checkpoint: str = "local",
-    shortcut: bool = True,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id.
 
@@ -58,13 +55,13 @@ def connected_components(
     component under the natural ordering of the id type.
 
     Each round: min over neighbor labels (one keyed shuffle,
-    map-side combined), then — with ``shortcut`` — one pointer-jump
-    (component := component-of-component), which doubles effective
+    map-side combined), then pointer jumps
+    (component := component-of-component), which multiply effective
     propagation distance: O(log diameter) rounds on chainy graphs
-    instead of O(diameter), at one extra self-join per round. For
-    the shallow same-as graphs of the reference both converge in
-    2-3 rounds; the shortcut is what survives a web-scale crawl
-    graph with long URL chains.
+    instead of O(diameter), at a state-table self-join per jump. The
+    shallow same-as graphs of the reference converge in 1-2 rounds;
+    the jumps are what survive a web-scale crawl graph with long URL
+    chains.
 
     Raises RuntimeError if max_iter rounds exhaust without
     convergence — unconverged labels would silently split components.
@@ -81,26 +78,22 @@ def connected_components(
     # ``edges`` is itself a pipeline (the dedup-cluster path feeds
     # verified LSH pairs in) the whole upstream DAG would re-run
     # every round. One checkpoint job up front, O(rounds) saved.
-    und = _ckpt(und, checkpoint)
-    if checkpoint in ("local", "reliable"):
-        # round-state exchanges sized by the MATERIALIZED edge count
-        # (plans.tuning): the label/frontier tables the loop shuffles
-        # are bounded by it, and the count is a cached-block scan.
-        from multiomics_biocypher_kg_spark.plans.tuning import (
-            scaled_partitions,
-            scoped_shuffle_partitions,
-        )
+    und = _ckpt(und)
+    # round-state exchanges sized by the MATERIALIZED edge count
+    # (plans.tuning): the label/frontier tables the loop shuffles
+    # are bounded by it, and the count is a cached-block scan.
+    from multiomics_biocypher_kg_spark.plans.tuning import (
+        scaled_partitions,
+        scoped_shuffle_partitions,
+    )
 
-        with scoped_shuffle_partitions(
-            edges.sparkSession, scaled_partitions(edges.sparkSession, und.count())
-        ):
-            return _cc_rounds(und, max_iter, checkpoint, shortcut)
-    return _cc_rounds(und, max_iter, checkpoint, shortcut)
+    with scoped_shuffle_partitions(
+        edges.sparkSession, scaled_partitions(edges.sparkSession, und.count())
+    ):
+        return _cc_rounds(und, max_iter)
 
 
-def _cc_rounds(
-    und: DataFrame, max_iter: int, checkpoint: str, shortcut: bool
-) -> DataFrame:
+def _cc_rounds(und: DataFrame, max_iter: int) -> DataFrame:
     """The propagation loop of :func:`connected_components` (split out
     so the scale-adaptive partition scope wraps every round plan)."""
     # fused init = the first propagation round: label(v) = min(v, N(v))
@@ -109,8 +102,7 @@ def _cc_rounds(
     labels = _ckpt(
         und.groupBy(F.col("a").alias("node")).agg(
             F.least(F.min("b"), F.col("a")).alias("component")
-        ),
-        checkpoint,
+        )
     )
     # convergence probe: min-label propagation is monotone (labels only
     # ever decrease), so convergence = no node's label shrank this
@@ -134,45 +126,44 @@ def _cc_rounds(
             "node", "component", F.col("component").alias("old_comp")
         )
         candidates = own.union(neighbor)
-        if shortcut:
-            # pointer jump: component-of-component joins INTO the
-            # union feeding the min() agg (same fixed point; keeping
-            # the checkpoint directly after the agg also sidesteps a
-            # Spark 4 localCheckpoint-of-union attribute-rewrite bug)
-            l2 = labels.select(
-                F.col("node").alias("c_node"), F.col("component").alias("c_comp")
+        # pointer jump: component-of-component joins INTO the
+        # union feeding the min() agg (same fixed point; keeping
+        # the checkpoint directly after the agg also sidesteps a
+        # Spark 4 localCheckpoint-of-union attribute-rewrite bug)
+        l2 = labels.select(
+            F.col("node").alias("c_node"), F.col("component").alias("c_comp")
+        )
+        jump = (
+            labels.join(l2, labels.component == l2.c_node)
+            .select("node", F.col("c_comp").alias("component"), null_old)
+        )
+        candidates = candidates.union(jump)
+        # DOUBLE jump (component^3 per round): one more state-
+        # table join triples effective propagation distance, so
+        # shallow graphs converge a full round earlier — with the
+        # convergence probe that is one fewer join+agg+checkpoint
+        # +probe cycle. Interleaved A/B on the sf1.0 same-as
+        # graph: 3 rounds / 2.19 s -> 2 rounds / 1.80 s (min-of-3).
+        # Same fixed point: jumps only propagate existing labels
+        # along component pointers, min() stays monotone.
+        l3 = labels.select(
+            F.col("node").alias("d_node"), F.col("component").alias("d_comp")
+        )
+        jump2 = (
+            jump.alias("j")
+            .join(l3, F.col("j.component") == F.col("d_node"))
+            .select(
+                F.col("j.node").alias("node"),
+                F.col("d_comp").alias("component"),
+                null_old,
             )
-            jump = (
-                labels.join(l2, labels.component == l2.c_node)
-                .select("node", F.col("c_comp").alias("component"), null_old)
-            )
-            candidates = candidates.union(jump)
-            # DOUBLE jump (component^3 per round): one more state-
-            # table join triples effective propagation distance, so
-            # shallow graphs converge a full round earlier — with the
-            # convergence probe that is one fewer join+agg+checkpoint
-            # +probe cycle. Interleaved A/B on the sf1.0 same-as
-            # graph: 3 rounds / 2.19 s -> 2 rounds / 1.80 s (min-of-3).
-            # Same fixed point: jumps only propagate existing labels
-            # along component pointers, min() stays monotone.
-            l3 = labels.select(
-                F.col("node").alias("d_node"), F.col("component").alias("d_comp")
-            )
-            jump2 = (
-                jump.alias("j")
-                .join(l3, F.col("j.component") == F.col("d_node"))
-                .select(
-                    F.col("j.node").alias("node"),
-                    F.col("d_comp").alias("component"),
-                    null_old,
-                )
-            )
-            candidates = candidates.union(jump2)
+        )
+        candidates = candidates.union(jump2)
         new_labels = candidates.groupBy("node").agg(
             F.min("component").alias("component"),
             F.min("old_comp").alias("old_comp"),
         )
-        ck = _ckpt(new_labels, checkpoint)
+        ck = _ckpt(new_labels)
         changed = ck.where(F.col("component") != F.col("old_comp")).count()
         labels = ck.select("node", "component")
         if changed == 0:
@@ -190,7 +181,6 @@ def canonical_mapping(
     anchors: DataFrame | None = None,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    checkpoint: str = "local",
 ) -> DataFrame:
     """sameas evidence -> (entity_id, canonical_id, is_conflict).
 
@@ -202,9 +192,7 @@ def canonical_mapping(
 
     ``anchors``: optional DataFrame(entity_id) of tier-1 anchor ids.
     """
-    comp = connected_components(
-        sameas, src=id_a, dst=id_b, checkpoint=checkpoint
-    ).select(
+    comp = connected_components(sameas, src=id_a, dst=id_b).select(
         F.col("node").alias("entity_id"), "component"
     )
     if anchors is None:

@@ -104,26 +104,27 @@ class StagedRunner:
         return checksum == recorded.get("checksum") and n == recorded.get("n_rows")
 
     def run_stage(
-        self,
-        stage: str,
-        build: "callable[[], DataFrame]",
-        keys: list[str],
-        force: bool = False,
+        self, stage: str, build: "callable[[], DataFrame]", keys: list[str]
     ) -> DataFrame:
         """Run (or resume) one stage. If the stage table exists with a
         recorded lineage, the build is skipped entirely (resume); else
         the DataFrame is upserted via merge_into on ``keys`` —
         re-running a crashed half-written stage converges to the same
-        table (idempotence)."""
+        table (idempotence).
+
+        The recorded totals come from the per-partition lineage rows
+        (one job): n_rows = sum of n_rows, checksum = sum of checksums
+        mod 2^63 — the value :func:`content_checksum` recomputes."""
         data, lin = self._paths(stage)
-        if self.is_complete(stage) and not force:
+        if self.is_complete(stage):
             return self.spark.read.parquet(data)
         df = build()
         os.makedirs(os.path.dirname(data), exist_ok=True)
         merge_into(self.spark, data, df, keys)
         out = self.spark.read.parquet(data)
-        checksum, n = content_checksum(out)
         per_part = [r.asDict() for r in lineage_rows(out, stage).collect()]
+        n = sum(p["n_rows"] for p in per_part)
+        checksum = sum(p["checksum"] for p in per_part) % (2**63)
         # write-then-rename: lineage.json appears atomically, so a
         # crash mid-dump leaves no torn file behind
         tmp = lin + ".tmp"

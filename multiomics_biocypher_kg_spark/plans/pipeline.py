@@ -1,11 +1,14 @@
 """End-to-end KG-construction DAG.
 
 extract -> mention -> link -> canonicalize -> materialize -> enrich
-(SURVEY.md §7.1). Every stage is a pure DataFrame transform; the
-returned dict is lazy — callers decide what to materialize (tests
-collect tiny slices; ``run_staged`` persists each stage as a
-partitioned parquet stage table with a lineage row, the
-Iceberg-layout stand-in).
+(SURVEY.md §7.1), as ONE ordered stage list (:func:`build_graph`).
+Each entry names its stage table, its merge keys, the stages it
+reads and a builder. ``run_staged`` commits each stage as a
+partitioned parquet stage table with a lineage row (the
+Iceberg-layout stand-in) and feeds every builder the COMMITTED
+tables of its upstream stages, so no stage re-derives an earlier
+one, and a resume builds nothing at all: connected components run
+only inside the ``canonicalize`` build.
 
 Same-as evidence: in the real corpus this comes from shared-ID /
 co-mention evidence; for the deterministic driver corpus
@@ -16,6 +19,8 @@ FIXTURES.md A3.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,7 +30,7 @@ from multiomics_biocypher_kg_spark.operators.enrich import (
     rank_percentile_bucket,
 )
 from multiomics_biocypher_kg_spark.operators.extract import extract
-from multiomics_biocypher_kg_spark.operators.link import link, resolution_histogram
+from multiomics_biocypher_kg_spark.operators.link import link
 from multiomics_biocypher_kg_spark.operators.materialize import (
     sameas_triples,
     triples_from_links,
@@ -34,6 +39,9 @@ from multiomics_biocypher_kg_spark.operators.materialize import (
 from multiomics_biocypher_kg_spark.operators.mention import mentions_tokens
 from multiomics_biocypher_kg_spark.sources.pages import pages_from_documents
 from multiomics_biocypher_kg_spark.sources.vocab import vocab_df
+
+#: (stage, merge keys, upstream stages, builder(*upstream tables))
+Stage = tuple[str, list[str], tuple[str, ...], Callable[..., DataFrame]]
 
 
 def sameas_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,70 +62,56 @@ def sameas_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stars.union(bridges).where(F.col("id_a") != F.col("id_b"))
 
 
-def build_graph(
-    spark: SparkSession, sf_dir: str, cc_checkpoint: str = "local"
-) -> dict[str, DataFrame]:
-    """Run the full DAG over the driver corpus; returns lazy stages.
-
-    ``cc_checkpoint='reliable'`` makes the connected-components loop
-    checkpoint to the durable dir set via setCheckpointDir — the
-    multi-executor setting where a lost executor must not kill the
-    lineage-truncated run."""
-    pages = pages_from_documents(spark, sf_dir)
-    vocab = vocab_df(spark)
-    docs = extract(pages)
-    mentions = mentions_tokens(docs, vocab)
-    links = link(mentions, vocab)
-    sameas = sameas_from_documents(spark, sf_dir)
-    mapping = canonical_mapping(sameas, checkpoint=cc_checkpoint)
-
+def materialize(links: DataFrame, mapping: DataFrame) -> DataFrame:
+    """Stage 5: mention triples + same-as triples, deterministic edge ids."""
     mention_triples = triples_from_links(links, subj_col="url")
-    same_triples = sameas_triples(mapping)
-    triples = with_edge_id(mention_triples.unionByName(same_triples))
+    return with_edge_id(mention_triples.unionByName(sameas_triples(mapping)))
 
-    rollups = entity_rollups(links)
-    ranked = rank_percentile_bucket(
-        rollups.withColumn("vocab_group", F.split("entity_id", ":")[0]),
+
+def enrich(links: DataFrame) -> DataFrame:
+    """Stage 6: entity rollups ranked per vocabulary group (W3)."""
+    return rank_percentile_bucket(
+        entity_rollups(links).withColumn("vocab_group", F.split("entity_id", ":")[0]),
         ["vocab_group"],
         "mention_count",
         "entity_id",
     )
-    return {
-        "pages": pages,
-        "docs": docs,
-        "mentions": mentions,
-        "links": links,
-        "link_histogram": resolution_histogram(links),
-        "sameas": sameas,
-        "mapping": mapping,
-        "triples": triples,
-        "entity_nodes": ranked,
-    }
 
 
-def run_staged(
-    spark: SparkSession, sf_dir: str, workdir: str, cc_checkpoint: str = "local"
-) -> dict[str, "DataFrame"]:
+def build_graph(spark: SparkSession, sf_dir: str) -> list[Stage]:
+    """The DAG over the driver corpus as an ordered stage list. Plans
+    nothing and runs no job: every builder is called only when its
+    stage has to be (re)built."""
+
+    def link_docs(docs: DataFrame) -> DataFrame:
+        vocab = vocab_df(spark)
+        return link(mentions_tokens(docs, vocab), vocab)
+
+    return [
+        ("extract", ["url"], (), lambda: extract(pages_from_documents(spark, sf_dir))),
+        ("link", ["url", "pos"], ("extract",), link_docs),
+        ("canonicalize", ["entity_id"], (),
+         lambda: canonical_mapping(sameas_from_documents(spark, sf_dir))),
+        ("materialize", ["edge_id"], ("link", "canonicalize"), materialize),
+        ("enrich", ["entity_id"], ("link",), enrich),
+    ]
+
+
+def run_staged(spark: SparkSession, sf_dir: str, workdir: str) -> dict[str, DataFrame]:
     """The DAG as idempotent, resumable stage tables (north rule):
-    each stage = one parquet stage table + lineage row; re-running
-    skips completed stages; a crashed half-write converges via the
-    MERGE INTO emulation (see plans.lineage.StagedRunner)."""
+    each stage = one parquet stage table + lineage row, built from the
+    committed tables of its upstream stages; re-running skips
+    completed stages; a crashed half-write converges via the MERGE
+    INTO emulation (see plans.lineage.StagedRunner).
+
+    -> {stage: committed stage table}
+    """
     from multiomics_biocypher_kg_spark.plans.lineage import StagedRunner
 
     runner = StagedRunner(spark, workdir)
-    stages = build_graph(spark, sf_dir, cc_checkpoint=cc_checkpoint)
     out: dict[str, DataFrame] = {}
-    out["docs"] = runner.run_stage("extract", lambda: stages["docs"], ["url"])
-    out["links"] = runner.run_stage(
-        "link", lambda: stages["links"], ["url", "pos"]
-    )
-    out["mapping"] = runner.run_stage(
-        "canonicalize", lambda: stages["mapping"], ["entity_id"]
-    )
-    out["triples"] = runner.run_stage(
-        "materialize", lambda: stages["triples"], ["edge_id"]
-    )
-    out["entity_nodes"] = runner.run_stage(
-        "enrich", lambda: stages["entity_nodes"], ["entity_id"]
-    )
+    for stage, keys, upstream, builder in build_graph(spark, sf_dir):
+        out[stage] = runner.run_stage(
+            stage, lambda b=builder, u=upstream: b(*(out[s] for s in u)), keys
+        )
     return out

@@ -67,7 +67,14 @@ def scaled_partitions(spark: SparkSession, n_rows: int) -> int:
 @contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
     """Run the body with ``spark.sql.shuffle.partitions = n``;
-    restore the previous value afterwards (exception-safe)."""
+    restore the previous value afterwards (exception-safe).
+
+    This sets the SESSION-GLOBAL conf, not a per-query one: any query
+    planned on the same session while the body runs — from another
+    driver thread, or a parallel harness sharing the session — picks
+    up the loop-scoped value too. It assumes a single-threaded driver,
+    which holds for every caller here; a multi-threaded driver must
+    give each iterative loop its own session (``spark.newSession()``)."""
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(int(n)))

@@ -33,17 +33,13 @@ from multiomics_biocypher_kg_spark.operators.canonicalize import connected_compo
 from multiomics_biocypher_kg_spark.operators.extract import extract
 from multiomics_biocypher_kg_spark.operators.link import link, resolution_histogram
 from multiomics_biocypher_kg_spark.operators.mention import mentions_tokens
-from multiomics_biocypher_kg_spark.operators.materialize import (
-    sameas_triples,
-    triples_from_links,
-    with_edge_id,
-)
 from multiomics_biocypher_kg_spark.operators.canonicalize import canonical_mapping
-from multiomics_biocypher_kg_spark.operators.enrich import (
-    entity_rollups,
-    rank_percentile_bucket,
+from multiomics_biocypher_kg_spark.operators.enrich import entity_rollups
+from multiomics_biocypher_kg_spark.plans.pipeline import (
+    enrich,
+    materialize,
+    sameas_from_documents,
 )
-from multiomics_biocypher_kg_spark.plans.pipeline import sameas_from_documents
 from multiomics_biocypher_kg_spark.sources.pages import pages_from_documents
 from multiomics_biocypher_kg_spark.sources.vocab import vocab_df, vocab_values_sql
 
@@ -597,9 +593,8 @@ def kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage 5: the materialized (subj, pred, obj) triple table."""
     p = _pipeline(spark, sf_dir)
-    mention_triples = triples_from_links(p["links"], subj_col="url")
     mapping = canonical_mapping(sameas_from_documents(spark, sf_dir))
-    return with_edge_id(mention_triples.unionByName(sameas_triples(mapping)))
+    return materialize(p["links"], mapping)
 
 
 @register(
@@ -646,14 +641,7 @@ def kg_entity_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kg_entity_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 semantics (rank / percentile / bucket) over entity rollups."""
     p = _pipeline(spark, sf_dir)
-    rollups = entity_rollups(p["links"]).drop("langs")
-    ranked = rank_percentile_bucket(
-        rollups.withColumn("vocab_group", F.split("entity_id", ":")[0]),
-        ["vocab_group"],
-        "mention_count",
-        "entity_id",
-    )
-    return ranked.select(
+    return enrich(p["links"]).select(
         "entity_id",
         "vocab_group",
         "mention_count",

@@ -21,6 +21,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    a third of physical memory, between 1 and 16 GiB.
+
+    ParallelGC never returns heap to the OS, so a local JVM whose
+    ``-Xmx`` is near or above physical memory grows until the kernel
+    OOM killer takes it (a long shared test session did exactly that
+    with a fixed 16g on a 15 GB host). The third leaves room for
+    off-heap buffers, the Python workers and the rest of the host.
+    """
+    try:
+        phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    except (ValueError, OSError, AttributeError):
+        return "16g"
+    return f"{max(1024, min(16384, phys_mb // 3))}m"
+
+
 def build_session(
     app_name: str = "multiomics_biocypher_kg_spark",
     master: str | None = None,
@@ -64,7 +81,7 @@ def build_session(
         .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
         # exact percentile + deterministic float handling for oracle parity
         .config("spark.sql.legacy.allowUntypedScalaUDF", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         # batch engine, no pause SLO: the throughput collector beats G1
         # under the page-copy allocation rate of regexp-heavy extraction
         # (measured ~1.7x on the scaling corpus at 32 threads)

@@ -24,7 +24,8 @@ Every stage materializes as an idempotent parquet stage table with a
 lineage row (counts + checksums); re-submitting the SAME command
 resumes: completed stages verify their recorded checksum and are
 skipped, a crashed half-write converges through the MERGE INTO
-emulation. Exit output is one JSON line with per-stage row counts.
+emulation. Exit output is one JSON line with per-stage row counts,
+keyed by stage name.
 """
 
 from __future__ import annotations
@@ -63,13 +64,9 @@ def main(argv: list[str] | None = None) -> int:
         master=args.local_master or "submit",
         shuffle_partitions=args.shuffle_partitions,
     )
-    cc_checkpoint = "local"
     if args.checkpoint_dir:
         spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
-        cc_checkpoint = "reliable"
-    stages = run_staged(
-        spark, args.sf_dir, args.workdir, cc_checkpoint=cc_checkpoint
-    )
+    stages = run_staged(spark, args.sf_dir, args.workdir)
     summary = {name: df.count() for name, df in stages.items()}
     print(json.dumps({"status": "ok", "rows": summary}))
     spark.stop()

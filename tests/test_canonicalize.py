@@ -28,7 +28,8 @@ def test_components_chain_star_isolated(spark):
 def test_components_long_chain_shortcut_converges(spark):
     """A 120-node chain has diameter >> max_iter=25: plain min-label
     propagation cannot converge, but the pointer-jump shortcut
-    reaches the fixed point in O(log diameter) rounds."""
+    reaches the fixed point in O(log diameter) rounds — and a budget
+    too small even for that raises instead of returning."""
     import pytest
     from multiomics_biocypher_kg_spark.operators.canonicalize import (
         connected_components,
@@ -43,10 +44,10 @@ def test_components_long_chain_shortcut_converges(spark):
         for r in connected_components(edges, max_iter=25).collect()
     }
     assert out == {i: 0 for i in range(n)}
-    # without the shortcut the same budget must raise, not return
-    # silently-split components
+    # an exhausted budget must raise, not return silently-split
+    # components
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=10, shortcut=False)
+        connected_components(edges, max_iter=2)
 
 
 def test_components_on_driver_sameas(spark):

@@ -28,7 +28,7 @@ def test_spark_submit_pyfiles_end_to_end_and_resume(tmp_path):
     zip_path = os.path.join(REPO, zip_rel)
     env = dict(os.environ, PYSPARK_PYTHON=sys.executable)
 
-    def submit():
+    def submit(*extra):
         out = subprocess.run(
             [
                 "spark-submit",
@@ -43,6 +43,7 @@ def test_spark_submit_pyfiles_end_to_end_and_resume(tmp_path):
                 str(tmp_path / "wh"),
                 "--shuffle-partitions",
                 "8",
+                *extra,
             ],
             capture_output=True,
             text=True,
@@ -55,9 +56,13 @@ def test_spark_submit_pyfiles_end_to_end_and_resume(tmp_path):
         return json.loads(line)
 
     first = submit()
-    assert first["rows"]["triples"] > 0
-    assert first["rows"]["docs"] > 0
+    assert first["rows"]["materialize"] > 0
+    assert first["rows"]["extract"] > 0
     # re-submit resumes (checksum-verified skip) and converges to the
-    # identical table contents
-    second = submit()
+    # identical table contents; the dropped canonicalize stage is
+    # rebuilt with reliable checkpoints, chosen by the checkpoint dir
+    shutil.rmtree(tmp_path / "wh" / "canonicalize")
+    ckpt = tmp_path / "ckpt"
+    second = submit("--checkpoint-dir", str(ckpt))
     assert second["rows"] == first["rows"]
+    assert any(files for _, _, files in os.walk(ckpt))
